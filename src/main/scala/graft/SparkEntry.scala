@@ -72,8 +72,8 @@ object SparkEntry {
   }
 
   /** Flagship query (SURVEY §3.3): directory-style scan of `documents`
-    * -> ai_extract -> unpivot -> pivot to wide. Driver smoke-checks
-    * rows>0 on sf0.001.
+    * -> per-document ai_extract -> one column per field. Callers
+    * smoke-check rows>0 on sf0.001.
     */
   def entry(spark: SparkSession): DataFrame =
     Pipelines.batchSqlOverDocuments(spark, "/root/testdata/sf0.001",

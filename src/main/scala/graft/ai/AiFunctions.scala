@@ -49,17 +49,26 @@ object AiFunctions {
         s"spark.graft.ai.backend must be 'deterministic' or an http(s) URL, got '$other'")
     }
 
-  /** AI_EXTRACT (app:202-210): map of {field -> question} in, map of
-    * {field -> answer} out. The {"response": ...} envelope of the
-    * reference is applied by `ai_extract_json` below when the raw
-    * payload shape matters.
+  /** What one answerAll yields under the error-as-row contract (X9,
+    * app:855-856): None for a null text or prompt map, Left(message)
+    * when the backend throws — one bad document keeps the batch alive.
+    * Both extract shapes below derive from one such call.
     */
-  private def mkExtractUdf(b: DocAiBackend) = udf { (text: String, prompts: Map[String, String]) =>
-    if (text == null || prompts == null) null
-    else try b.answerAll(text, prompts)
-    catch { // error-as-row (X9, app:855-856): keep the batch alive
-      case e: Exception => Map("error" -> String.valueOf(e.getMessage))
-    }
+  private[graft] type Extracted = Option[Either[String, Map[String, String]]]
+
+  private[graft] def extractOnce(b: DocAiBackend, text: String,
+                                 prompts: Map[String, String]): Extracted =
+    if (text == null || prompts == null) None
+    else Some(try Right(b.answerAll(text, prompts))
+      catch { case e: Exception => Left(String.valueOf(e.getMessage)) })
+
+  /** AI_EXTRACT's shape (app:202-210): {field -> answer}, or
+    * {"error" -> message} for a failed call.
+    */
+  private[graft] def resultMap(x: Extracted): Map[String, String] = x match {
+    case None => null
+    case Some(Right(answers)) => answers
+    case Some(Left(msg)) => Map("error" -> msg)
   }
 
   /** RFC-8259-complete JSON string escape: backslash, quote, and ALL
@@ -85,21 +94,32 @@ object AiFunctions {
     sb.toString
   }
 
-  /** AI_EXTRACT returning the reference's exact JSON envelope
-    * {"response": {field: answer}} (app:503, app:854, app:962).
+  private def errorEnvelope(msg: String): String =
+    s"""{"error": "${jsonEscape(msg)}"}"""
+
+  /** The reference's exact JSON envelope {"response": {field: answer}}
+    * (app:503, app:854, app:962), or {"error": msg} like app:855-856.
     */
-  private def mkExtractJsonUdf(b: DocAiBackend) = udf { (text: String, prompts: Map[String, String]) =>
-    if (text == null || prompts == null) null
-    else try {
-      val answers = b.answerAll(text, prompts)
-      val fields = answers.toSeq.sortBy(_._1).map { case (f, a) =>
-        s""""${jsonEscape(f)}": "${jsonEscape(a)}""""
+  private[graft] def envelope(x: Extracted): String = x match {
+    case None => null
+    case Some(Left(msg)) => errorEnvelope(msg)
+    case Some(Right(answers)) =>
+      try {
+        val fields = answers.toSeq.sortBy(_._1).map { case (f, a) =>
+          s""""${jsonEscape(f)}": "${jsonEscape(a)}""""
+        }
+        s"""{"response": {${fields.mkString(", ")}}}"""
+      } catch { // a null answer cannot be enveloped: error-as-row too
+        case e: Exception => errorEnvelope(String.valueOf(e.getMessage))
       }
-      s"""{"response": {${fields.mkString(", ")}}}"""
-    } catch { // error-as-row (X9): {"error": msg} like app:855-856
-      case e: Exception =>
-        s"""{"error": "${jsonEscape(String.valueOf(e.getMessage))}"}"""
-    }
+  }
+
+  private def mkExtractUdf(b: DocAiBackend) = udf { (text: String, prompts: Map[String, String]) =>
+    resultMap(extractOnce(b, text, prompts))
+  }
+
+  private def mkExtractJsonUdf(b: DocAiBackend) = udf { (text: String, prompts: Map[String, String]) =>
+    envelope(extractOnce(b, text, prompts))
   }
 
   private def mkClassifyUdf(b: DocAiBackend) = udf { (text: String) =>

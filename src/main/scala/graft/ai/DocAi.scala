@@ -38,6 +38,14 @@ trait DocAiBackend extends Serializable {
   def parse(content: Array[Byte]): String
   /** Freeform completion (summaries, prompt-schema generation). */
   def complete(model: String, prompt: String): String
+
+  /** Documents one Spark task may keep in flight against this backend
+    * in the bulk pipelines (batch-SQL, stream). At 1, the default,
+    * every call runs inline on the task thread; a remote backend whose
+    * calls wait on the network returns more, so a task overlaps its
+    * documents' round trips (see [[InFlight]]).
+    */
+  def concurrency: Int = 1
 }
 
 /** Deterministic, pure-function-of-input backend: regex + heuristics +

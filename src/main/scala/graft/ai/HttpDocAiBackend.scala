@@ -112,6 +112,12 @@ final class HttpDocAiBackend(baseUrl: String,
   override def complete(model: String, prompt: String): String =
     node(postJson("/complete", jsonOf("model" -> model, "prompt" -> prompt)))
       .path("completion").asText("")
+
+  /** The reference's bulk fan-out, `min(8, max(2, cpus))` (app:881),
+    * sized on the executor that runs the task.
+    */
+  override def concurrency: Int =
+    math.min(8, math.max(2, Runtime.getRuntime.availableProcessors()))
 }
 
 object HttpDocAiBackend {

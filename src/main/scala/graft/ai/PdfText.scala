@@ -140,6 +140,7 @@ final class PdfAwareBackend(inner: DocAiBackend = DeterministicLocalBackend)
     inner.answerAll(text, prompts)
   override def classify(text: String): String = inner.classify(text)
   override def complete(model: String, prompt: String): String = inner.complete(model, prompt)
+  override def concurrency: Int = inner.concurrency
   override def parse(content: Array[Byte]): String =
     if (PdfText.looksLikePdf(content)) {
       val t = PdfText.extract(content)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Relational core of the engine: the set-based algorithms the reference
   * expresses via Snowflake SQL (MERGE, NOT-EXISTS-guarded insert, QUALIFY
-  * dedup, unpivot/pivot), re-expressed as composable DataFrame transforms.
+  * dedup, map unpivot), re-expressed as composable DataFrame transforms.
   *
   * Reference behaviors (cited file:line against
   * /root/reference/app/Auto-Magic Document AI.py = app,
@@ -145,20 +145,4 @@ object Relational {
     df.select(
       df.columns.filterNot(_ == mapCol).map(col) :+
         explode(col(mapCol)).as(Seq(keyName, valName)): _*)
-
-  /** Widen field rows into one row per id with a column per field name —
-    * the dynamic-schema union of app:888-899 done set-based via pivot
-    * (X3/X5). The pivot is the presentation edge; upstream state stays
-    * MapType so 100 TB of drifting schemas never trigger DDL churn.
-    */
-  def widen(df: DataFrame, idCols: Seq[String], keyCol: String, valCol: String,
-            knownKeys: Seq[String] = Nil): DataFrame = {
-    val grouped = df.groupBy(idCols.map(col): _*)
-    // explicit pivot values skip the extra distinct-values pass over the
-    // input — at scale that pass would re-run everything upstream
-    // (including AI extraction) a second time
-    val pivoted = if (knownKeys.nonEmpty) grouped.pivot(keyCol, knownKeys)
-                  else grouped.pivot(keyCol)
-    pivoted.agg(first(col(valCol), ignoreNulls = true))
-  }
 }

@@ -1,9 +1,11 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.ai.AiFunctions._
+import graft.ai.InFlight
 import graft.engine.Catalog
 import graft.ops.Relational
 
@@ -11,27 +13,22 @@ import graft.ops.Relational
   *
   * Interactive (app:356-604): one document through classify -> ensure
   * prompts -> extract -> OCR -> summarize -> persist x4. The reference
-  * runs OCR on a side thread (app:450-452); here classify/extract/ocr/
-  * summary are sibling columns of one Dataset — Spark's task parallelism
-  * replaces the thread pool.
+  * runs OCR on a side thread (app:450-452); here one job scans, parses
+  * and classifies the document, one direct extract call yields both
+  * the JSON envelope and the field map, ocr/summary are sibling
+  * columns of a local Dataset, and the four persists run concurrently.
   *
   * Batch-SQL (app:944-966): the purest "query" — one set-based plan:
-  * directory scan -> ai_extract column -> explode -> pivot. At 100 TB
-  * this is the canonical shape: no driver loops, no collect, AI calls
-  * distribute across executors, pivot only at the presentation edge.
+  * directory scan -> per-document AI step (parse -> extract) -> one
+  * column per prompt field read from the answer map. One job, no
+  * shuffle, no collect: AI calls distribute across executors and
+  * overlap within each task.
   *
   * Streaming (app:838-906): per-file fan-out with incremental results
-  * — Structured Streaming file source + foreachBatch persists.
+  * — Structured Streaming file source -> the same per-document step
+  * (parse -> classify -> extract) -> foreachBatch persists.
   */
 object Pipelines {
-
-  /** Build a sorted map literal Column from a prompts map — shared by
-    * every pipeline mode that ships prompts into the plan.
-    */
-  private def promptsLiteral(prompts: Map[String, String]) =
-    if (prompts.isEmpty) map().cast("map<string,string>")
-    else map(prompts.toSeq.sortBy(_._1)
-      .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
 
   /** Run independent persist jobs concurrently and settle ALL of them
     * before propagating the first failure — callers unpersist shared
@@ -116,12 +113,12 @@ object Pipelines {
     // canonicalized prompt map via the invalidation-based PromptStore
     // cache (app:490, app:162-183) — the warm path costs zero jobs
     val promptMap = PromptStore.get(cat, className)
+    // ONE model call serves both extract shapes (envelope + field map)
+    val answers = extractOnce(backend, docRow.getString(2), promptMap)
     val derived = Seq((docRow.getString(0), docRow.getString(1),
-        docRow.getString(2), className))
-      .toDF("file_url", "relative_path", "text", "class_name")
-      .withColumn("prompt_map", promptsLiteral(promptMap))
-      .withColumn("extraction_result", ai_extract_json(col("text"), col("prompt_map")))
-      .withColumn("result_map", ai_extract(col("text"), col("prompt_map")))
+        docRow.getString(2), className, envelope(answers), resultMap(answers)))
+      .toDF("file_url", "relative_path", "text", "class_name",
+        "extraction_result", "result_map")
       .withColumn("ocr", to_json(struct(col("text").as("content"))))
       .withColumn("summary", ai_complete(lit("mistral-7b"),
         substring(col("text"), 1, 6000)))
@@ -177,36 +174,85 @@ object Pipelines {
     if (!present) ensurePrompts(cat, Seq(className).toDF("class_name"))
   }
 
-  /** Batch single-SQL mode (§3.3) — the flagship one-plan query:
-    * stage scan -> extract -> explode -> pivot to wide.
+  /** The bulk modes' per-document AI step: one `mapPartitions` over
+    * `df` that runs parse (when `input` is binary content, else `input`
+    * is the text) -> classify (when `forPersist`) -> answerAll, each
+    * once per document, with up to `backend.concurrency` documents in
+    * flight per task and rows emitted in input order ([[InFlight]]).
+    *
+    * The UDF chain it replaces ran each call three times in batch-SQL:
+    * InferFiltersFromGenerate guards the explode with
+    * `size(result_map) > 0 AND isnotnull(result_map)`, and filter
+    * pushdown substitutes the `ai_extract(parse_document(content))`
+    * alias into that guard. Catalyst copies nothing through a
+    * MapPartitions node, so here the calls run exactly once.
+    *
+    * Output: the other input columns, then `result_map` (ai_extract's
+    * shape); with `forPersist`, also the other columns [[persistBatch]]
+    * writes: `class_name` and `extraction_result` (ai_extract_json's
+    * envelope, from the same answer). Null input -> null outputs, as
+    * the UDFs give; a parse or classify failure fails the task; an
+    * extract failure is an error row (X9).
     */
-  def batchSql(cat: Catalog, stage: String, prompts: Map[String, String]): DataFrame = {
-    val promptsCol = promptsLiteral(prompts)
-    val scanned = cat.directory(stage)
-      .withColumn("text", parse_document(col("content")))
-      .withColumn("result_map", ai_extract(col("text"), promptsCol))
-      .select(col("relative_path"), col("file_url"), col("result_map"))
-    val long = Relational.unpivotMap(scanned, "result_map", "field_name", "field_value")
-    Relational.widen(long, Seq("relative_path", "file_url"), "field_name", "field_value",
-      knownKeys = prompts.keys.toSeq.sorted)
+  private[pipelines] def perDocument(df: DataFrame, input: String,
+                                     prompts: Map[String, String],
+                                     forPersist: Boolean = false): DataFrame = {
+    val b = backend
+    val keep = df.columns.filterNot(_ == input).toSeq
+    val binary = df.schema(input).dataType == BinaryType
+    val out = StructType(keep.map(df.schema(_)) ++
+      Seq(StructField("result_map", MapType(StringType, StringType))) ++
+      (if (forPersist) Seq(StructField("class_name", StringType),
+        StructField("extraction_result", StringType)) else Nil))
+    val n = keep.size
+    df.select((keep :+ input).map(col): _*).mapPartitions { rows =>
+      InFlight.map(rows, b.concurrency) { r =>
+        val text =
+          if (!binary) r.getString(n)
+          else if (r.isNullAt(n)) null
+          else b.parse(r.getAs[Array[Byte]](n))
+        val cls = if (forPersist && text != null) b.classify(text) else null
+        val answers = extractOnce(b, text, prompts)
+        Row.fromSeq((0 until n).map(r.get) ++ Seq(resultMap(answers)) ++
+          (if (forPersist) Seq(cls, envelope(answers)) else Nil))
+      }
+    }(Encoders.row(out))
   }
+
+  /** Presentation edge of the batch modes: one column per prompt field,
+    * read straight from `result_map`. Row presence matches the explode
+    * this replaced: a document whose map is null or empty is absent,
+    * and an error map ({"error" -> msg}) yields a row of nulls.
+    */
+  private def wide(df: DataFrame, prompts: Map[String, String]): DataFrame = {
+    val m = col("result_map")
+    df.filter(m.isNotNull && size(m) > 0)
+      .select(df.columns.filterNot(_ == "result_map").map(col) ++
+        prompts.keys.toSeq.sorted.map(k => m.getItem(k).as(k)): _*)
+  }
+
+  /** Batch single-SQL mode (§3.3) — the flagship one-plan query:
+    * stage scan -> parse -> extract -> one column per prompt field.
+    * A Spark sort over the result re-runs the plan, model calls
+    * included, in its range-sampling job: against a remote model,
+    * sort after collecting or persist first.
+    */
+  def batchSql(cat: Catalog, stage: String, prompts: Map[String, String]): DataFrame =
+    wide(perDocument(
+      cat.directory(stage).select("relative_path", "file_url", "content"),
+      "content", prompts), prompts)
 
   /** Same flagship plan phrased directly over the `documents` fixture
     * table (no staging round-trip) — used by SparkEntry.entry and bench.
     */
   def batchSqlOverDocuments(spark: SparkSession, sfDir: String,
                             prompts: Map[String, String]): DataFrame = {
-    val promptsCol = promptsLiteral(prompts)
     // spread-before-extract was MEASURED a 0.75-0.82x regression here
     // (SpreadAb, round 17 second pass): the ai_extract scan stage is
     // read-dominated, not extract-dominated, so the text exchange
     // costs more than the parallelism returns — kept serial
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .withColumn("result_map", ai_extract(col("text"), promptsCol))
-      .select(col("doc_id"), col("result_map"))
-    val long = Relational.unpivotMap(docs, "result_map", "field_name", "field_value")
-    Relational.widen(long, Seq("doc_id"), "field_name", "field_value",
-      knownKeys = prompts.keys.toSeq.sorted)
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    wide(perDocument(docs, "text", prompts), prompts)
   }
 
   /** Batch stream mode (§3.2/X2): Structured Streaming over the stage
@@ -217,22 +263,17 @@ object Pipelines {
     */
   def stream(cat: Catalog, stage: String, prompts: Map[String, String],
              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val promptsCol = promptsLiteral(prompts)
     val dir = cat.stageDir(stage)
     val src = cat.spark.readStream.format("binaryFile")
       .schema(Catalog.binaryFileSchema)
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", 64) // pacing knob (X2)
       .load(dir)
-    val stagePrefix = Catalog.stagePathPrefix(stage)
-    val extracted = src
-      .withColumn("relative_path",
-        regexp_replace(col("path"), stagePrefix, ""))
-      .withColumn("file_url", concat(lit(s"@$stage/"), col("relative_path")))
-      .withColumn("text", parse_document(col("content")))
-      .withColumn("class_name", ai_classify(col("text")))
-      .withColumn("extraction_result", ai_extract_json(col("text"), promptsCol))
-      .withColumn("result_map", ai_extract(col("text"), promptsCol))
+    val relativePath = regexp_replace(col("path"), Catalog.stagePathPrefix(stage), "")
+    val extracted = perDocument(
+      src.select(relativePath.as("relative_path"),
+        concat(lit(s"@$stage/"), relativePath).as("file_url"), col("content")),
+      "content", prompts, forPersist = true)
     val run = runToken(checkpoint)
     extracted.writeStream
       .option("checkpointLocation", checkpoint)

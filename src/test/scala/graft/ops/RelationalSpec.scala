@@ -113,17 +113,6 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
     assert(out.toSeq == Seq((1, "a", "1"), (1, "b", "2")))
   }
 
-  test("widen pivots field rows back to wide columns (round trip)") {
-    val df = Seq((1, Map("a" -> "1", "b" -> "2")), (2, Map("a" -> "3")))
-      .toDF("id", "m")
-    val long = Relational.unpivotMap(df, "m", "field", "value")
-    val wide = Relational.widen(long, Seq("id"), "field", "value")
-      .orderBy("id")
-    assert(wide.columns.toSeq == Seq("id", "a", "b"))
-    val rows = wide.as[(Int, Option[String], Option[String])].collect()
-    assert(rows.toSeq == Seq((1, Some("1"), Some("2")), (2, Some("3"), None)))
-  }
-
   test("mergeInto equals last-writer-wins keyed-map semantics (property)") {
     // random merge sequences vs a Scala Map foldLeft model (SURVEY §5.3)
     val rnd = new scala.util.Random(5)
@@ -139,23 +128,5 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
       }.as[(Int, String)].collect().toMap
       assert(got == model, s"batches=$batches")
     }
-  }
-
-  test("widen is monotone in the key set (X5 property)") {
-    val d1 = Seq((1, Map("a" -> "1"))).toDF("id", "m")
-    val d2 = Seq((1, Map("a" -> "1")), (2, Map("a" -> "2", "b" -> "3"))).toDF("id", "m")
-    val w1 = Relational.widen(Relational.unpivotMap(d1, "m", "f", "v"), Seq("id"), "f", "v")
-    val w2 = Relational.widen(Relational.unpivotMap(d2, "m", "f", "v"), Seq("id"), "f", "v")
-    assert(w1.columns.toSet.subsetOf(w2.columns.toSet),
-      "adding documents may only add columns, never remove them")
-  }
-
-  test("widen with knownKeys produces identical result without value scan") {
-    val df = Seq((1, Map("a" -> "1", "b" -> "2"))).toDF("id", "m")
-    val long = Relational.unpivotMap(df, "m", "field", "value")
-    val a = Relational.widen(long, Seq("id"), "field", "value").orderBy("id").collect()
-    val b = Relational.widen(long, Seq("id"), "field", "value", Seq("a", "b"))
-      .orderBy("id").collect()
-    assert(a.toSeq == b.toSeq)
   }
 }

@@ -18,6 +18,7 @@ import graft.engine.Catalog
   * any operator (SURVEY §2.9; the reference's remote Cortex posture).
   */
 class PipelineHttpBackendSpec extends AnyFunSuite with SparkTestBase {
+  import spark.implicits._
 
   private val docA = "Invoice INV-7 from Acme. The total is $250. Due on 2024-03-01."
   private val docB = "Contract between Foo and Bar. Effective date 2023-12-31. Term two years."
@@ -62,6 +63,73 @@ class PipelineHttpBackendSpec extends AnyFunSuite with SparkTestBase {
       spark.conf.set("spark.graft.ai.backend", "deterministic")
       AiFunctions.configureFrom(spark)
       assert(AiFunctions.backend eq DeterministicLocalBackend)
+    }
+  }
+
+  test("one model call per document per function in every mode, same output") {
+    // pins that Catalyst cannot copy a model call back into the plan:
+    // the old batch-SQL UDF chain ran parse and extract 3x per document
+    val prompts = Map("title" -> "What is the title?", "date" -> "What is the date?")
+    val texts = Seq(docA, docB, "Report on Q3. The title is Growth. Dated 2024-10-01.",
+      "Letter to Bob. Sent 2022-05-05. Regards, Ann.")
+    val n = texts.size
+    def staged(): Catalog = {
+      val cat = new Catalog(spark,
+        java.nio.file.Files.createTempDirectory("graft_pipe_calls_").toString)
+      cat.ensureTables()
+      texts.zipWithIndex.foreach { case (t, i) =>
+        cat.putFile("docs", s"d$i.txt", t.getBytes(StandardCharsets.UTF_8)) }
+      cat
+    }
+    val docsDir = java.nio.file.Files.createTempDirectory("graft_pipe_docs_").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .write.parquet(s"$docsDir/documents.parquet")
+    // sorted after collect: a Spark sort's range-sample job would run
+    // the whole plan, model calls included, a second time
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val modes: Seq[(String, () => Seq[String])] = Seq(
+      "batch_sql" -> (() => rows(Pipelines.batchSql(staged(), "docs", prompts))),
+      "over_documents" -> (() => rows(Pipelines.batchSqlOverDocuments(spark, docsDir, prompts))),
+      "stream" -> { () =>
+        val cat = staged()
+        val q = Pipelines.stream(cat, "docs", prompts, cat.root + "/cp")
+        try q.processAllAvailable() finally q.stop()
+        rows(cat.table("DOCUMENTS_PROCESSED")
+          .select("file_url", "file_ref", "class_name", "extraction_result")) ++
+          rows(cat.table("DOCUMENTS_EXTRACTED_FIELDS")
+            .select("file_ref", "class_name", "field_name", "field_value"))
+      },
+      "interactive" -> { () =>
+        val cat = staged()
+        texts.indices.foreach(i => Pipelines.interactive(cat, "docs", s"d$i.txt"))
+        rows(cat.table("DOCUMENTS_PROCESSED")
+          .select("file_url", "class_name", "extraction_result"))
+      })
+    val control = modes.map { case (m, run) => m -> run() }.toMap
+    assert(control.values.forall(_.nonEmpty))
+
+    val server = DocAiProtocolTestServer.launch()
+    try {
+      spark.conf.set("spark.graft.ai.backend", server.url)
+      AiFunctions.configureFrom(spark)
+      val perDoc = modes.map { case (m, run) =>
+        val before = server.counts
+        val out = run()
+        assert(out == control(m), s"$m through HTTP diverged:\n$out\nvs\n${control(m)}")
+        m -> server.counts.map { case (k, v) => k -> (v - before(k)).toDouble / n }
+      }.toMap
+      def pin(mode: String, want: (String, Double)*): Unit = want.foreach { case (k, v) =>
+        assert(perDoc(mode)(k) == v, s"$mode: $k calls per document ${perDoc(mode)(k)} != $v")
+      }
+      pin("batch_sql", "parse" -> 1, "extract" -> 1, "classify" -> 0)
+      pin("over_documents", "parse" -> 0, "extract" -> 1, "classify" -> 0)
+      pin("stream", "parse" -> 1, "classify" -> 1, "extract" -> 1)
+      pin("interactive", "parse" -> 1, "classify" -> 1, "extract" -> 1)
+    } finally {
+      server.stop()
+      spark.conf.set("spark.graft.ai.backend", "deterministic")
+      AiFunctions.configureFrom(spark)
     }
   }
 
